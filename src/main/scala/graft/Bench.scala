@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Perf harness: per query, one untimed warmup run then 3 timed runs,
   * reporting the median — JIT/first-scan warmup and sandbox jitter
@@ -14,15 +14,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = graft.util.Env.orElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = graft.util.Env.orElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = graft.util.Env.orElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = graft.util.Session.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def exec(df: DataFrame): Unit =

@@ -2,31 +2,21 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round helper: dump `.explain("formatted")` for named
   * queries to files (plans/rNN/<query>_<tag>.txt) so plan-shape claims
   * in OPTIMIZATION_rNN.md are checkable without running Spark.
   *
   * Usage: runMain graft.PlanDump <outDir> <tag> <q1,q2,...>
-  * Session config mirrors Bench exactly — same master, shuffle
-  * partitions, timezone, extensions — so the dumped plan is the plan
-  * the bench times. Constructing a query executes its setup (DDL
+  * Same session as Bench ([[graft.util.Session]]), so the dumped plan
+  * is the plan the bench times. Constructing a query executes its setup (DDL
   * ladders etc.); the dump is the FINAL returned DataFrame's plan.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(outDir, tag, names) = args.take(3)
     val sfDir = graft.util.Env.orElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = graft.util.Env.orElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = graft.util.Env.orElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.util.Session.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Files.createDirectories(Paths.get(outDir))
     val wanted = names.split(",").map(_.trim).filter(_.nonEmpty)

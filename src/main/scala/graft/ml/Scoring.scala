@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.Estimate
 import graft.model.Tables
+import graft.util.Scratch
 
 /** Model-scoring stage: MLlib stand-ins for the reference's three
   * Keras heads over the feature vector
@@ -66,8 +67,7 @@ object Scoring {
         .setFeaturesCol("features").setLabelCol("t_xpos")
         .setSolver("normal").setRegParam(0.0)
         .fit(train)
-      val path = java.nio.file.Files
-        .createTempDirectory("graft-model-").toString + "/queue_end_pos"
+      val path = Scratch.fresh(spark, dir, "model-score") + "/queue_end_pos"
       fit.write.overwrite().save(path)
       org.apache.spark.ml.regression.LinearRegressionModel.load(path)
     }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.model.Tables
+import graft.util.Scratch
 
 /** Second analytic wave: distribution windows, batch sessionization,
   * exact-decimal moment statistics, map functions, multiset set ops,
@@ -376,8 +377,7 @@ ORDER BY p.user_id, p.event_id""")),
     // partition-independent).
     QueryDef("q_incremental_agg",
       (spark, dir) => {
-        val partialsDir = java.nio.file.Files
-          .createTempDirectory("graft-incr-").toString + "/partials"
+        val partialsDir = Scratch.fresh(spark, dir, "incremental-agg") + "/partials"
         def partialsOf(df: org.apache.spark.sql.DataFrame) =
           df.groupBy(col("event_type"))
             .agg(sum(col("value").cast("decimal(32,10)")).as("s"),

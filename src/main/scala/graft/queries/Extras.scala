@@ -1,12 +1,13 @@
 package graft.queries
 
-import java.nio.file.{Files, Paths}
-
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.functions.{Estimate, Exact, LatestAggregator, LatestIn}
 import graft.model.Tables
+import graft.util.Scratch
 
 /** Source/sink/DAG operators that complete the reference inventory:
   * the binaryFile object-store scan with filename parsing (S1/S2/F1),
@@ -15,7 +16,7 @@ import graft.model.Tables
   * user-defined aggregation). */
 object Extras {
 
-  /** Write one small .bin object per station into `dir`, named
+  /** Write one small .bin object per station into `out`, named
     * `station_id_<id>_<basicIso>.bin` — the reference's S3 object
     * layout (reference: tasks.py:20-25, estimate_queue.py:38). The
     * write runs on executors via foreachPartition (a custom sink, not
@@ -27,12 +28,15 @@ object Extras {
       .agg(max_by(date_format(col("ts"), "yyyyMMdd'T'HHmmss"),
         struct(col("ts"), col("event_id"))).as("ts_basic"))
       .select(col("user_id"), col("ts_basic"))
+    val conf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
     latest.foreachPartition { rows: Iterator[Row] =>
+      val fs = new Path(out).getFileSystem(conf.value)
       rows.foreach { r =>
         val name = s"station_id_${r.getLong(0)}_${r.getString(1)}.bin"
         val body = s"${r.getLong(0)}:${r.getString(1)}"
-        Files.write(Paths.get(out, name),
-          body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        val os = fs.create(new Path(out, name), true)
+        try os.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        finally os.close()
       }
     }
   }
@@ -114,7 +118,7 @@ FROM anc GROUP BY depth ORDER BY depth"""
     // (path, modificationTime, length, content).
     QueryDef("q_binary_source",
       (spark, dir) => {
-        val out = Files.createTempDirectory("graft-bin-").toString
+        val out = Scratch.fresh(spark, dir, "binary-source")
         writeStationObjects(spark, dir, out)
         val basicTs = Estimate.parseStationTs(col("path"))
         spark.read.format("binaryFile")
@@ -184,9 +188,10 @@ FROM keys""")),
     // a separate plan that starts from the materialized scan.
     QueryDef("q_checkpoint_reuse",
       (spark, dir) => {
-        val target = Files.createTempDirectory("graft-ckpt-").toString + "/hourly"
+        val target = Scratch.fresh(spark, dir, "checkpoint-reuse") + "/hourly"
+        val tp = new Path(target)
         def stage1(): Unit =
-          if (!new java.io.File(target).exists) {
+          if (!tp.getFileSystem(spark.sessionState.newHadoopConf()).exists(tp)) {
             Tables.events(spark, dir)
               .groupBy(col("user_id"),
                 date_trunc("hour", col("ts")).as("hour"))
@@ -218,7 +223,7 @@ FROM hourly ORDER BY user_id, hour_us""")),
     // original), so the oracle gates the round-trip itself.
     QueryDef("q_format_roundtrip",
       (spark, dir) => {
-        val tmp = Files.createTempDirectory("graft-fmt-").toString
+        val tmp = Scratch.fresh(spark, dir, "format-roundtrip")
         val ev = Tables.events(spark, dir)
           .select(col("event_id"), col("user_id"), col("event_type"),
             col("value"), unix_micros(col("ts")).as("ts_us"))
@@ -246,7 +251,7 @@ FROM events""")),
     // data and all of it.
     QueryDef("q_partitioned_scan",
       (spark, dir) => {
-        val tmp = Files.createTempDirectory("graft-part-").toString + "/events_by_type"
+        val tmp = Scratch.fresh(spark, dir, "partitioned-scan") + "/events_by_type"
         Tables.events(spark, dir)
           .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
           .write.mode("overwrite").partitionBy("event_type").parquet(tmp)
@@ -388,10 +393,7 @@ GROUP BY 1 ORDER BY 1""")),
     // deterministic, so only the rollup is the gated output.)
     QueryDef("q_sink_manifest",
       (spark, dir) => {
-        val key = java.security.MessageDigest.getInstance("MD5")
-          .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
-        val target =
-          s"${spark.conf.get("spark.sql.warehouse.dir")}/graft-sink/$key"
+        val target = Scratch.fresh(spark, dir, "sink-manifest")
         Tables.events(spark, dir)
           .select(col("event_id"), col("event_type"), col("value"))
           .write.format("graft.sources.ManifestSink")
@@ -421,10 +423,7 @@ FROM events""")),
     // bound.
     QueryDef("q_manifest_roundtrip",
       (spark, dir) => {
-        val key = java.security.MessageDigest.getInstance("MD5")
-          .digest((dir + "#rt").getBytes("UTF-8")).map("%02x".format(_)).mkString
-        val target =
-          s"${spark.conf.get("spark.sql.warehouse.dir")}/graft-sink-rt/$key"
+        val target = Scratch.fresh(spark, dir, "manifest-roundtrip")
         Tables.events(spark, dir)
           .select(col("event_id"), col("event_type"), col("value"))
           .repartitionByRange(8, col("event_id"))
@@ -457,10 +456,7 @@ GROUP BY event_type ORDER BY event_type""")),
     // the stats path must agree with the data path exactly.
     QueryDef("q_manifest_stats_agg",
       (spark, dir) => {
-        val key = java.security.MessageDigest.getInstance("MD5")
-          .digest((dir + "#agg").getBytes("UTF-8")).map("%02x".format(_)).mkString
-        val target =
-          s"${spark.conf.get("spark.sql.warehouse.dir")}/graft-sink-agg/$key"
+        val target = Scratch.fresh(spark, dir, "manifest-stats-agg")
         Tables.events(spark, dir)
           .select(col("event_id"), col("event_type"), col("value"))
           .write.format("graft.sources.ManifestSink")
@@ -486,10 +482,7 @@ FROM events""")),
     // scanning a table and scanning a category.
     QueryDef("q_manifest_strprune",
       (spark, dir) => {
-        val key = java.security.MessageDigest.getInstance("MD5")
-          .digest((dir + "#strp").getBytes("UTF-8")).map("%02x".format(_)).mkString
-        val target =
-          s"${spark.conf.get("spark.sql.warehouse.dir")}/graft-sink-strp/$key"
+        val target = Scratch.fresh(spark, dir, "manifest-strprune")
         Tables.events(spark, dir)
           .select(col("event_id"), col("event_type"), col("value"))
           .repartitionByRange(8, col("event_type"))
@@ -521,11 +514,8 @@ FROM events WHERE event_type = 'purchase'""")),
     // table is strictly better for the source's range pruning.
     QueryDef("q_sink_compact",
       (spark, dir) => {
-        val key = java.security.MessageDigest.getInstance("MD5")
-          .digest((dir + "#cmp").getBytes("UTF-8")).map("%02x".format(_)).mkString
-        val wh = spark.conf.get("spark.sql.warehouse.dir")
-        val small = s"$wh/graft-sink-cmp/$key/small"
-        val packed = s"$wh/graft-sink-cmp/$key/packed"
+        val root = Scratch.fresh(spark, dir, "sink-compact")
+        val (small, packed) = (s"$root/small", s"$root/packed")
         Tables.events(spark, dir)
           .select(col("event_id"), col("event_type"), col("value"))
           .repartition(32)
@@ -660,10 +650,8 @@ FROM lineitem WHERE l_quantity > 10""")),
     // the v1/v2 derivations analytically over the raw table.
     QueryDef("q_cdc_diff",
       (spark, dir) => {
-        val key = java.security.MessageDigest.getInstance("MD5")
-          .digest((dir + "#cdc").getBytes("UTF-8")).map("%02x".format(_)).mkString
-        val wh = spark.conf.get("spark.sql.warehouse.dir")
-        val (t1, t2) = (s"$wh/graft-cdc/$key/v1", s"$wh/graft-cdc/$key/v2")
+        val root = Scratch.fresh(spark, dir, "cdc-diff")
+        val (t1, t2) = (s"$root/v1", s"$root/v2")
         val base = Tables.events(spark, dir)
           .select(col("event_id"), col("value"))
         base.filter(col("event_id") % 7 =!= 0)

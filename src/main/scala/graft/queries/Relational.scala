@@ -647,14 +647,12 @@ ORDER BY value DESC NULLS LAST, event_id LIMIT 20""")),
       (spark, dir) => {
         val w = Window.partitionBy(col("event_type"))
           .orderBy(col("value").desc, col("event_id"))
-        // explicit-width repartition on the window key: AQE's
-        // byte-based coalescing folds this small exchange to one task
-        // and serializes the per-group sort (same repair + rationale
-        // as q_hist_equidepth, OlapOps.scala; count follows
-        // spark.sql.shuffle.partitions, not a constant)
+        // NO repartition pin on the window key: it would stop Catalyst
+        // planning the Partial WindowGroupLimit below the exchange, so
+        // every row would cross the shuffle instead of k per group per
+        // task (PlanSpec pins the partial limit; a pin measured within
+        // noise of none at 10k and 300k events)
         Tables.events(spark, dir)
-          .repartition(spark.sessionState.conf.numShufflePartitions,
-            col("event_type"))
           .withColumn("rn", row_number().over(w))
           .filter(col("rn") <= 3)
           .select(col("event_type"), col("rn"), col("event_id"), col("value"))

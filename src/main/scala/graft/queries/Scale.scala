@@ -1,11 +1,11 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.functions.Exact
 import graft.model.Tables
+import graft.sources.GraftCatalog
+import graft.util.Scratch
 
 /** Skew- and co-location patterns: the join/aggregation shapes that
   * decide whether a plan survives a 100× scale-up. Each query produces
@@ -200,7 +200,7 @@ GROUP BY iv_id ORDER BY iv_id""")),
     QueryDef("q_dpp_join",
       (spark, dir) => {
         import spark.implicits._
-        val base = Files.createTempDirectory("graft-dpp-").toString
+        val base = Scratch.fresh(spark, dir, "dpp-join")
         val tmp = s"$base/events_by_type"
         Tables.events(spark, dir)
           .select(col("event_id"), col("user_id"), col("value"),
@@ -242,7 +242,7 @@ GROUP BY event_type ORDER BY event_type""")),
     // the sort order.
     QueryDef("q_bucketed_join",
       (spark, dir) => {
-        val tmp = Files.createTempDirectory("graft-bucket-").toString
+        val tmp = Scratch.fresh(spark, dir, "bucketed-join")
         val nb = 8
         spark.sql("DROP TABLE IF EXISTS graft_li_bucketed")
         spark.sql("DROP TABLE IF EXISTS graft_ord_bucketed")
@@ -436,9 +436,8 @@ FROM d ORDER BY zval, o_orderkey"""
     // the CBO estimate is the only variable.
     QueryDef("q_cbo_hist",
       (spark, dir) => {
-        val base = Files.createTempDirectory("graft-cbohist-").toString
-        spark.conf.set("spark.sql.catalog.gch", "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.gch.warehouse", base)
+        val base = Scratch.fresh(spark, dir, "cbo-hist")
+        GraftCatalog.register(spark, "gch", base)
         val fact = Tables.events(spark, dir).select(
           col("event_id").as("k"),
           when(col("event_id") % 50 === 0,

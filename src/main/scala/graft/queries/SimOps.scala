@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.{Exact, OracleHash}
 import graft.model.Tables
+import graft.util.Scratch
+import graft.util.Pin.PinOps
 
 /** Similarity search + near-duplicate detection + multimodal columns
   * over the `embeddings` feature vectors and `documents` corpus.
@@ -399,7 +401,7 @@ FROM cand ORDER BY id_a, id_b""")),
         // ONE shingle materialization feeds the signature build AND
         // both exact-intersection join sides (md5 per token runs once,
         // not twice).
-        val sh = shingleRows(spark, dir).localCheckpoint()
+        val sh = shingleRows(spark, dir).pinned()
         val cand = minhashPairs(spark, dir, Some(sh))
         val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
         val inter = cand.select(col("id_a"), col("id_b"))
@@ -988,7 +990,7 @@ FROM documents GROUP BY lang ORDER BY lang""")),
             lshBucket(col("embedding")).as("bucket"),
             sqrt(Exact.sumSq(col("embedding"))).as("norm"))
           .join(cellOf, "vec_id")
-          .localCheckpoint() // both self-join sides + the rollup reuse it
+          .pinned() // both self-join sides + the rollup reuse it
         val a = z.select(col("vec_id").as("id_a"), col("embedding").as("emb_a"),
           col("cell"), col("bucket"), col("norm").as("norm_a"))
         val b = z.select(col("vec_id").as("id_b"), col("embedding").as("emb_b"),
@@ -1141,7 +1143,7 @@ FROM b GROUP BY vec_id ORDER BY vec_id""")),
         // cannot dedupe them)
         val cents = centroidArrays(spark, dir)
           .select(col("label").as("cell"), col("centroid"))
-          .localCheckpoint()
+          .pinned()
         def cellD2(df: org.apache.spark.sql.DataFrame, idCol: String) =
           df.crossJoin(broadcast(cents))
             .select(col(idCol),
@@ -1169,7 +1171,7 @@ FROM b GROUP BY vec_id ORDER BY vec_id""")),
             expr("dim % 8").as("j"), col("x"))
         // 80-entry codebook, consumed by the probe distance tables AND
         // the corpus code assignment — computed once
-        val codebook = pqCodebook(spark, dir).localCheckpoint()
+        val codebook = pqCodebook(spark, dir).pinned()
         val dt = psub.join(broadcast(codebook), Seq("m", "j"))
           .select(col("probe_id"), col("m"), col("k"),
             ((xd - col("c")) * (xd - col("c")))
@@ -1512,14 +1514,7 @@ WHERE rn <= 5 ORDER BY probe_id, d2, vec_id""")),
     // snapshot versioning across two appends.
     QueryDef("q_ann_index_serve",
       (spark, dir) => {
-        val key = java.security.MessageDigest.getInstance("MD5")
-          .digest((dir + "#annidx").getBytes("UTF-8"))
-          .map("%02x".format(_)).mkString
-        val t =
-          s"${spark.conf.get("spark.sql.warehouse.dir")}/graft-ann-idx/$key"
-        val p = new org.apache.hadoop.fs.Path(t)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(p)) fs.delete(p, true) // idempotent reruns
+        val t = Scratch.fresh(spark, dir, "ann-index-serve")
         val emb = Tables.embeddings(spark, dir)
         // the quantizer is re-scanned by BOTH index builds and the
         // probe shortlist (3 consumers) — materialize the 10-row
@@ -1528,7 +1523,7 @@ WHERE rn <= 5 ORDER BY probe_id, d2, vec_id""")),
         // q_ann_adc's shared codebook; measured ~2x on this query)
         val cents = centroidArrays(spark, dir)
           .select(col("label").as("cell"), col("centroid"))
-          .localCheckpoint()
+          .pinned()
         // (cell, vec_id, code) index rows for a corpus slice: cell =
         // nearest label-seeded centroid (exact-decimal d2), code =
         // 63-bit sign word. Computed ONLY over the slice — that is
@@ -1678,14 +1673,7 @@ WHERE rn <= 5 ORDER BY probe_id, hamming, vec_id""")),
     // roundtrip losslessly (longs).
     QueryDef("q_minhash_incremental",
       (spark, dir) => {
-        val key = java.security.MessageDigest.getInstance("MD5")
-          .digest((dir + "#mhidx").getBytes("UTF-8"))
-          .map("%02x".format(_)).mkString
-        val t =
-          s"${spark.conf.get("spark.sql.warehouse.dir")}/graft-mh-idx/$key"
-        val p = new org.apache.hadoop.fs.Path(t)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(p)) fs.delete(p, true) // idempotent reruns
+        val t = Scratch.fresh(spark, dir, "minhash-incremental")
         // signatures once for the whole corpus shape; the index/delta
         // split below decides who pays banding + the join
         val minCols = minhashFamilies(MinhashK).zipWithIndex.map {
@@ -1695,7 +1683,7 @@ WHERE rn <= 5 ORDER BY probe_id, hamming, vec_id""")),
           .agg(minCols.head, minCols.tail: _*)
           .select(col("doc_id"),
             array((0 until MinhashK).map(i => col(s"m$i")): _*).as("sig"))
-          .localCheckpoint()
+          .pinned()
         val bandKeys = transform(sequence(lit(0), lit(MinhashBands - 1)),
           b => concat_ws(",",
             transform(slice(col("sig"), b * lit(MinhashR) + lit(1),
@@ -1908,7 +1896,7 @@ FROM cand ORDER BY id_b, id_h"""
       .agg(minCols.head, minCols.tail: _*)
       .select(col("doc_id"),
         array((0 until MinhashK).map(i => col(s"m$i")): _*).as("sig"))
-      .localCheckpoint()
+      .pinned()
     val bandKeys = transform(sequence(lit(0), lit(MinhashBands - 1)),
       b => concat_ws(",",
         transform(slice(col("sig"), b * lit(MinhashR) + lit(1), lit(MinhashR)),

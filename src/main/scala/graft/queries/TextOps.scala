@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.Exact
 import graft.model.Tables
+import graft.util.Scratch
+import graft.util.Pin.PinOps
 
 /** LLM-training-data text operators over the `documents` corpus:
   * exact deduplication, corpus tokenization/word count, token
@@ -151,14 +153,7 @@ FROM documents GROUP BY md5(text) ORDER BY keeper_id""")),
     // construction, so every leg is non-trivially exercised.
     QueryDef("q_dedup_incremental",
       (spark, dir) => {
-        val key = java.security.MessageDigest.getInstance("MD5")
-          .digest((dir + "#dedupinc").getBytes("UTF-8"))
-          .map("%02x".format(_)).mkString
-        val t =
-          s"${spark.conf.get("spark.sql.warehouse.dir")}/graft-dedup-idx/$key"
-        val p = new org.apache.hadoop.fs.Path(t)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(p)) fs.delete(p, true) // idempotent reruns
+        val t = Scratch.fresh(spark, dir, "dedup-incremental")
         val docs = Tables.documents(spark, dir)
         val fp = graft.functions.OracleHash.h64(col("text"))
         // committed index of the historical corpus
@@ -177,7 +172,7 @@ FROM documents GROUP BY md5(text) ORDER BY keeper_id""")),
         // contains the batch — an unpinned anti-join would then count
         // zero new fingerprints (same trap q_merge_upsert documents).
         val newUnique = batch.join(index.select(col("fp")), Seq("fp"),
-          "left_anti").localCheckpoint()
+          "left_anti").pinned()
         newUnique.select(col("fp"), col("keeper_id"))
           .write.format("graft.sources.ManifestSink")
           .option("path", t).option("history", "true")
@@ -757,7 +752,7 @@ FROM pp GROUP BY pair ORDER BY n DESC, pair LIMIT 20""")),
           .filter(length(col("w")) >= 1)
           .groupBy(col("w")).agg(count(lit(1)).as("wc"))
           .select(split(col("w"), "").as("toks"), col("wc"))
-          .localCheckpoint()
+          .pinned()
         val merges = Seq.newBuilder[(Int, String, String, Long)]
         var exhausted = false
         for (round <- 1 to K if !exhausted) {
@@ -789,7 +784,7 @@ FROM pp GROUP BY pair ORDER BY n DESC, pair LIMIT 20""")),
                 array(lit(lv + rv))))
               .otherwise(concat(acc, array(t))))
           words = words.select(fold.as("toks"), col("wc"))
-            .localCheckpoint()
+            .pinned()
           }
         }
         merges.result().toDF("round", "l", "r", "n")
@@ -899,25 +894,17 @@ FROM tf GROUP BY term ORDER BY df DESC, term LIMIT 30""")),
     // pre-delta snapshot is proven delta-free (time travel).
     QueryDef("q_text_index_serve",
       (spark, dir) => {
-        val key = java.security.MessageDigest.getInstance("MD5")
-          .digest((dir + "#textidx").getBytes("UTF-8"))
-          .map("%02x".format(_)).mkString
-        val t = s"${spark.conf.get("spark.sql.warehouse.dir")}" +
-          s"/graft-text-idx/$key"
-        val p = new org.apache.hadoop.fs.Path(t)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(p)) fs.delete(p, true) // idempotent reruns
+        val t = Scratch.fresh(spark, dir, "text-index-serve")
         // (term_hash, tok, doc_id, tf) postings for a corpus slice —
         // computed ONLY over the slice: the incrementality
         // NOT fanned out (guide §1.1 measure-first): the postings feed
         // range-partitioned index writes whose sampling pass re-runs
         // the subtree — fanned, the ladder measured SLOWER
         // (q_bm25_idx 3.24 s → 5.01 s). A localCheckpoint ahead of the
-        // range writes was also measured (r21) and kept ONLY in
-        // q_bm25_idx: the sampling pass reuses the groupBy's shuffle
-        // files, so only the post-shuffle agg is double-computed —
-        // here (2 writes) the pin measured flat (1.30 vs 1.36 s
-        // median) and was reverted.
+        // range writes was also measured (r21) and reverted: the
+        // sampling pass reuses the groupBy's shuffle files, so only the
+        // post-shuffle agg is double-computed — here (2 writes) the pin
+        // measured flat (1.30 vs 1.36 s median).
         def postings(slice: org.apache.spark.sql.DataFrame) = slice
           .select(col("doc_id"), explode(toks(col("text"))).as("tok"))
           .filter(length(col("tok")) > 0)
@@ -1007,25 +994,14 @@ ORDER BY score DESC, doc_id LIMIT 20""")),
     // manifest header — cost scales with the QUERY, not the corpus.
     QueryDef("q_bm25_idx",
       (spark, dir) => {
-        val key = java.security.MessageDigest.getInstance("MD5")
-          .digest((dir + "#bm25idx").getBytes("UTF-8"))
-          .map("%02x".format(_)).mkString
-        val root = s"${spark.conf.get("spark.sql.warehouse.dir")}" +
-          s"/graft-bm25-idx/$key"
-        val rp = new org.apache.hadoop.fs.Path(root)
-        val fs = rp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(rp)) fs.delete(rp, true) // idempotent reruns
+        val root = Scratch.fresh(spark, dir, "bm25-idx")
         val pT = s"$root/postings"
         val dT = s"$root/doclen"
         // NOT fanned out (guide §1.1 measure-first): the postings feed
         // range-partitioned index writes whose sampling pass re-runs
         // the subtree — fanned, the ladder measured SLOWER
-        // (q_bm25_idx 3.24 s → 5.01 s). localCheckpoint'd instead
-        // (guide §5): each of the FOUR range writes consumes its input
-        // twice (sampling job + shuffle) — the sampler reuses the
-        // upstream shuffle files, so the saved work is the post-shuffle
-        // agg per write. Measured r21 (pairwise alternation, 3 pairs):
-        // 3.05 → 2.93 s median, -0.26 s median pairwise delta.
+        // (q_bm25_idx 3.24 s → 5.01 s). Not pinned either: the r21
+        // pin measured slower on 8 cores (2.53 → 3.20 s).
         def postings(slice: org.apache.spark.sql.DataFrame) = slice
           .select(col("doc_id"), explode(toks(col("text"))).as("tok"))
           .filter(length(col("tok")) > 0)
@@ -1033,13 +1009,10 @@ ORDER BY score DESC, doc_id LIMIT 20""")),
           .agg(count(lit(1)).as("tf"))
           .select(xxhash64(col("tok")).as("term_hash"), col("tok"),
             col("doc_id"), col("tf"))
-          .localCheckpoint()
         // dl = ALL whitespace tokens (q_bm25's definition), not just
-        // the non-empty ones the postings index; same double-consume
-        // under the range write → same pin
+        // the non-empty ones the postings index
         def doclen(slice: org.apache.spark.sql.DataFrame) = slice
           .select(col("doc_id"), size(toks(col("text"))).cast("long").as("dl"))
-          .localCheckpoint()
         val docs = Tables.documents(spark, dir)
         val base = docs.filter(col("doc_id") % 5 =!= 0)
         val delta = docs.filter(col("doc_id") % 5 === 0)

@@ -6,7 +6,9 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.Exact
 import graft.model.Tables
-import graft.sources.ManifestMaintenance
+import graft.sources.{GraftCatalog, ManifestMaintenance}
+import graft.util.Scratch
+import graft.util.Pin.PinOps
 
 /** Snapshot-history table operations over the manifest format — the
   * Iceberg/Delta-shaped warehouse surface assembled from the engine's
@@ -25,19 +27,6 @@ import graft.sources.ManifestMaintenance
   * (KBs of metadata at any table size).
   */
 object Warehouse {
-
-  /** Per-(query, sf-dir) table path under the session warehouse dir,
-    * deleted before each run so version numbering is idempotent across
-    * reruns (history commits would otherwise accumulate). */
-  private def freshTable(spark: SparkSession, dir: String, tag: String): String = {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir#$tag".getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val path = s"${spark.conf.get("spark.sql.warehouse.dir")}/graft-wh/$tag/$key"
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-    path
-  }
 
   private def writeHistory(df: DataFrame, path: String, mode: String,
       parts: Int = 4): Unit =
@@ -61,7 +50,7 @@ object Warehouse {
     // bit-for-bit.
     QueryDef("q_time_travel",
       (spark, dir) => {
-        val t = freshTable(spark, dir, "tt")
+        val t = Scratch.fresh(spark, dir, "tt")
         val base = Tables.events(spark, dir).select(col("event_id"), col("value"))
         writeHistory(base.filter(col("event_id") % 3 === 0), t, "overwrite")
         writeHistory(base.filter(col("event_id") % 4 === 0)
@@ -96,7 +85,7 @@ SELECT
     // is ever collected or broadcast-materialized on the driver.
     QueryDef("q_merge_upsert",
       (spark, dir) => {
-        val t = freshTable(spark, dir, "merge")
+        val t = Scratch.fresh(spark, dir, "merge")
         val base = Tables.events(spark, dir).select(col("event_id"), col("value"))
         writeHistory(base.filter(col("event_id") % 3 === 0), t, "overwrite")
         // target PINNED to snapshot v1, not the head: DataFrames are
@@ -155,7 +144,7 @@ SELECT
     // read of the narrower v1 snapshot.
     QueryDef("q_append_evolve",
       (spark, dir) => {
-        val t = freshTable(spark, dir, "evolve")
+        val t = Scratch.fresh(spark, dir, "evolve")
         val ev = Tables.events(spark, dir)
         writeHistory(ev.select(col("event_id"), col("value"))
           .filter(col("event_id") % 5 === 0), t, "overwrite")
@@ -194,7 +183,7 @@ SELECT
     // of commit 3, proving reclamation never touches live data.
     QueryDef("q_sink_vacuum",
       (spark, dir) => {
-        val t = freshTable(spark, dir, "vacuum")
+        val t = Scratch.fresh(spark, dir, "vacuum")
         val base = Tables.events(spark, dir).select(col("event_id"), col("value"))
         (0 to 2).foreach { m =>
           writeHistory(base.filter(col("event_id") % 7 === m), t, "overwrite")
@@ -240,7 +229,7 @@ SELECT
     QueryDef("q_mv_maintain",
       (spark, dir) => {
         import org.apache.spark.sql.types.DecimalType
-        val t = freshTable(spark, dir, "mv")
+        val t = Scratch.fresh(spark, dir, "mv")
         val ev = Tables.events(spark, dir)
         val dec = (c: org.apache.spark.sql.Column) => c.cast(DecimalType(30, 2))
         writeHistory(ev.filter(col("event_id") % 2 === 0)
@@ -335,7 +324,7 @@ ORDER BY d.event_type""")),
     // answer — which is what makes it gateable by a SQL oracle.
     QueryDef("q_manifest_bloom",
       (spark, dir) => {
-        val t = freshTable(spark, dir, "bloom")
+        val t = Scratch.fresh(spark, dir, "bloom")
         Tables.events(spark, dir)
           .select(col("event_id"), col("event_type"), col("value"))
           .repartition(8, col("event_id"))
@@ -366,7 +355,7 @@ ORDER BY event_id""")),
         // complete-mode agg = stateful: run at the streaming surface's
         // pinned stateful parallelism (see Streams.streamSession)
         val spark = graft.streaming.Streams.streamSession(spark0)
-        val t = freshTable(spark, dir, "msrc")
+        val t = Scratch.fresh(spark, dir, "msrc")
         val base = Tables.orders(spark, dir).select(
           col("o_orderkey").as("k"), col("o_orderpriority").as("prio"),
           col("o_totalprice").as("price"))
@@ -405,8 +394,8 @@ FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""")),
     QueryDef("q_stream_medallion",
       (spark0, dir) => {
         val spark = graft.streaming.Streams.streamSession(spark0)
-        val bronze = freshTable(spark, dir, "medallion-bronze")
-        val silver = freshTable(spark, dir, "medallion-silver")
+        val bronze = Scratch.fresh(spark, dir, "medallion-bronze")
+        val silver = Scratch.fresh(spark, dir, "medallion-silver")
         val base = Tables.orders(spark, dir).select(
           col("o_orderkey").as("k"), col("o_orderpriority").as("prio"),
           col("o_totalprice").as("price"))
@@ -419,7 +408,7 @@ FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""")),
           .filter(col("price") > 1000.0)
           .writeStream
           .option("checkpointLocation",
-            java.nio.file.Files.createTempDirectory("graft-medal-ckpt-").toString)
+            Scratch.fresh(spark, dir, "medallion-ckpt"))
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .foreachBatch { (batch: DataFrame, batchId: Long) =>
             // the txn gate: a marker per delivered batch makes the
@@ -460,10 +449,8 @@ GROUP BY o_orderpriority ORDER BY o_orderpriority""")),
     // OVERWRITE truncate semantics, and `VERSION AS OF` time travel.
     QueryDef("q_sql_catalog",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "sqlcat")
-        spark.conf.set("spark.sql.catalog.graftcat",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftcat.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "sqlcat")
+        GraftCatalog.register(spark, "graftcat", wh)
         val base = Tables.orders(spark, dir).select(
           col("o_orderkey").as("k"), col("o_orderpriority").as("prio"),
           col("o_totalprice").as("price"))
@@ -496,7 +483,7 @@ GROUP BY o_orderpriority ORDER BY o_orderpriority""")),
     // analytically over raw events.
     QueryDef("q_restore",
       (spark, dir) => {
-        val t = freshTable(spark, dir, "restore")
+        val t = Scratch.fresh(spark, dir, "restore")
         val base = Tables.events(spark, dir)
           .select(col("event_id"), col("value"))
         writeHistory(base.filter(col("event_id") % 5 === 0), t, "overwrite")
@@ -534,10 +521,8 @@ GROUP BY o_orderpriority ORDER BY o_orderpriority""")),
     // versions analytically over raw events.
     QueryDef("q_delete_cow",
       (spark, dir) => {
-        val t = freshTable(spark, dir, "cow")
-        spark.conf.set("spark.sql.catalog.graftcow",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftcow.warehouse", t)
+        val t = Scratch.fresh(spark, dir, "cow")
+        GraftCatalog.register(spark, "graftcow", t)
         val base = Tables.events(spark, dir)
           .select(col("event_id"), col("value"))
         base.repartitionByRange(8, col("event_id"))
@@ -580,11 +565,9 @@ GROUP BY o_orderpriority ORDER BY o_orderpriority""")),
     // (ManifestStreamSpec pins resuming ACROSS the COW commit).
     QueryDef("q_stream_cdf",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "cdf")
+        val wh = Scratch.fresh(spark, dir, "cdf")
         val tbl = s"$wh/wh/ev_t"
-        spark.conf.set("spark.sql.catalog.graftcdf",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftcdf.warehouse", wh)
+        GraftCatalog.register(spark, "graftcdf", wh)
         val base = Tables.events(spark, dir)
           .select(col("event_id"), col("event_type"))
         writeHistory(base.filter(col("event_id") % 2 === 0), tbl, "overwrite")
@@ -631,11 +614,9 @@ FROM feed ORDER BY _commit_version, _change_type, event_id""")),
     // ledger (EqSpec pins the compaction-crossing side).
     QueryDef("q_stream_cdf_eq",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "cdfeq")
+        val wh = Scratch.fresh(spark, dir, "cdfeq")
         val tbl = s"$wh/wh/ev_t"
-        spark.conf.set("spark.sql.catalog.graftcdfe",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftcdfe.warehouse", wh)
+        GraftCatalog.register(spark, "graftcdfe", wh)
         val base = Tables.events(spark, dir)
           .select(col("event_id"), col("event_type"))
         writeHistory(base.filter(col("event_id") % 2 === 0), tbl, "overwrite")
@@ -684,7 +665,7 @@ FROM feed ORDER BY _commit_version, _change_type, event_id""")),
     // oracle gates that the clustered roundtrip loses nothing).
     QueryDef("q_clustered_write",
       (spark, dir) => {
-        val t = freshTable(spark, dir, "cluster")
+        val t = Scratch.fresh(spark, dir, "cluster")
         Tables.events(spark, dir)
           .select(col("event_id"), col("event_type"), col("value"))
           .repartition(8, col("event_type")) // deliberately scrambled
@@ -717,10 +698,8 @@ GROUP BY event_type ORDER BY event_type""")),
     // just the deltas.
     QueryDef("q_stream_cdf_mor",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "cdfmor")
-        spark.conf.set("spark.sql.catalog.graftcdm",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftcdm.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "cdfmor")
+        GraftCatalog.register(spark, "graftcdm", wh)
         val base = Tables.events(spark, dir)
           .select(col("event_id"), col("event_type"))
         val tbl = s"$wh/wh/ev_t"
@@ -771,10 +750,8 @@ FROM feed ORDER BY _commit_version, _change_type, event_id""")),
     // rewrite later clears the vectors naturally.
     QueryDef("q_delete_mor",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "mor")
-        spark.conf.set("spark.sql.catalog.graftmor",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftmor.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "mor")
+        GraftCatalog.register(spark, "graftmor", wh)
         Tables.events(spark, dir)
           .select(col("event_id"), col("event_type"), col("value"))
           .repartitionByRange(8, col("event_id"))
@@ -824,10 +801,8 @@ ORDER BY snapshot""")),
     // oracle restates the final table from raw events with a CASE.
     QueryDef("q_update_sql",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "updsql")
-        spark.conf.set("spark.sql.catalog.graftupd",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftupd.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "updsql")
+        GraftCatalog.register(spark, "graftupd", wh)
         Tables.events(spark, dir)
           .select(col("event_id"), col("event_type"), col("value"))
           .repartitionByRange(8, col("event_id"))
@@ -876,10 +851,8 @@ ORDER BY event_type""")),
     // table with joins/CASE (no MERGE needed oracle-side).
     QueryDef("q_merge_sql",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "mrgsql")
-        spark.conf.set("spark.sql.catalog.graftmrg",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftmrg.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "mrgsql")
+        GraftCatalog.register(spark, "graftmrg", wh)
         val base = Tables.orders(spark, dir).select(
           col("o_orderkey").as("k"), col("o_orderpriority").as("prio"),
           col("o_totalprice").as("price"))
@@ -947,10 +920,8 @@ FROM merged GROUP BY prio ORDER BY prio""")),
     // restates the sync as a full-outer-join projection.
     QueryDef("q_merge_sync",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "mrgsync")
-        spark.conf.set("spark.sql.catalog.graftmsy",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftmsy.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "mrgsync")
+        GraftCatalog.register(spark, "graftmsy", wh)
         val base = Tables.orders(spark, dir).select(
           col("o_orderkey").as("k"), col("o_orderpriority").as("prio"),
           col("o_totalprice").as("price"))
@@ -1018,10 +989,8 @@ FROM merged GROUP BY prio ORDER BY prio""")),
     // ladder rung above q_merge_sql's copy-on-write.
     QueryDef("q_merge_mor",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "mrgmor")
-        spark.conf.set("spark.sql.catalog.graftmm",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftmm.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "mrgmor")
+        GraftCatalog.register(spark, "graftmm", wh)
         val base = Tables.orders(spark, dir).select(
           col("o_orderkey").as("k"), col("o_orderpriority").as("prio"),
           col("o_totalprice").as("price"))
@@ -1099,7 +1068,7 @@ ORDER BY prio""")),
     // pins branch isolation, fork, fast-forward, and vacuum safety).
     QueryDef("q_wap_publish",
       (spark, dir) => {
-        val t = freshTable(spark, dir, "wap")
+        val t = Scratch.fresh(spark, dir, "wap")
         val base = Tables.events(spark, dir)
           .select(col("event_id"), col("event_type"), col("value"))
         writeHistory(base.filter(col("event_id") % 2 === 0), t, "overwrite")
@@ -1152,10 +1121,8 @@ ORDER BY prio""")),
     // gate and are spec-pinned instead.
     QueryDef("q_table_history",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "histtbl")
-        spark.conf.set("spark.sql.catalog.graftht",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftht.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "histtbl")
+        GraftCatalog.register(spark, "graftht", wh)
         val base = Tables.events(spark, dir)
           .select(col("event_id"), col("value"))
         val tbl = s"$wh/wh/ev_t"
@@ -1186,10 +1153,8 @@ ORDER BY prio""")),
     // (version, operation, n_rows) ladder; rows restate from events.
     QueryDef("q_history_ops",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "histops")
-        spark.conf.set("spark.sql.catalog.graftho",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftho.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "histops")
+        GraftCatalog.register(spark, "graftho", wh)
         spark.sql("CREATE TABLE graftho.wh.ev_t " +
           "(event_id BIGINT, event_type STRING, value DOUBLE)")
         Tables.events(spark, dir)
@@ -1244,10 +1209,8 @@ ORDER BY prio""")),
     // DV-mask application, and the key-disjoint layout.
     QueryDef("q_call_optimize",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "callopt")
-        spark.conf.set("spark.sql.catalog.graftpr",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftpr.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "callopt")
+        GraftCatalog.register(spark, "graftpr", wh)
         val base = Tables.events(spark, dir)
           .select(col("event_id"), col("event_type"), col("value"))
         writeHistory(base, s"$wh/wh/ev_t", "overwrite", parts = 32)
@@ -1280,10 +1243,8 @@ FROM events""")),
     // expired snapshot afterwards.
     QueryDef("q_call_lifecycle",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "calllc")
-        spark.conf.set("spark.sql.catalog.graftlc",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftlc.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "calllc")
+        GraftCatalog.register(spark, "graftlc", wh)
         val base = Tables.events(spark, dir)
           .select(col("event_id"), col("value"))
         val t = s"$wh/wh/ev_t"
@@ -1324,10 +1285,8 @@ FROM events""")),
     // clock TIMESTAMP AS OF resolves against.
     QueryDef("q_expire_time",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "exptime")
-        spark.conf.set("spark.sql.catalog.graftrt",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftrt.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "exptime")
+        GraftCatalog.register(spark, "graftrt", wh)
         val base = Tables.events(spark, dir)
           .select(col("event_id"), col("value"))
         val t = s"$wh/wh/ev_t"
@@ -1379,10 +1338,8 @@ FROM events""")),
     // debt does this table carry?") — answered from KBs of metadata.
     QueryDef("q_meta_files",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "metafiles")
-        spark.conf.set("spark.sql.catalog.graftmf",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftmf.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "metafiles")
+        GraftCatalog.register(spark, "graftmf", wh)
         val base = Tables.events(spark, dir)
           .select(col("event_id"), col("user_id"), col("value"))
         base.repartitionByRange(4, col("event_id"))
@@ -1422,10 +1379,8 @@ FROM events""")),
     // retired.
     QueryDef("q_meta_columns",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "metacols")
-        spark.conf.set("spark.sql.catalog.graftmc",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftmc.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "metacols")
+        GraftCatalog.register(spark, "graftmc", wh)
         spark.sql("CREATE TABLE graftmc.wh.ev_t " +
           "(event_id BIGINT, event_type STRING, value DOUBLE)")
         Tables.events(spark, dir)
@@ -1465,10 +1420,8 @@ ORDER BY retired, position, name""")),
     // schema across versions; this gate would NPE without it).
     QueryDef("q_alter_evolve",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "altersql")
-        spark.conf.set("spark.sql.catalog.graftal",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftal.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "altersql")
+        GraftCatalog.register(spark, "graftal", wh)
         val base = Tables.events(spark, dir)
         writeHistory(base.filter(col("event_id") % 2 === 0)
           .select(col("event_id"), col("value")), s"$wh/wh/ev_t", "overwrite")
@@ -1511,10 +1464,8 @@ ORDER BY retired, position, name""")),
     QueryDef("q_namespace_ddl",
       (spark, dir) => {
         import spark.implicits._
-        val wh = freshTable(spark, dir, "nsddl")
-        spark.conf.set("spark.sql.catalog.gnsd",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.gnsd.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "nsddl")
+        GraftCatalog.register(spark, "gnsd", wh)
         spark.sql(
           "CREATE NAMESPACE gnsd.raw WITH PROPERTIES ('tier' = 'bronze')")
         spark.sql("CREATE NAMESPACE gnsd.curated")
@@ -1561,10 +1512,8 @@ ORDER BY retired, position, name""")),
     // 100 TB the only viable shape for evolving a payload struct.
     QueryDef("q_nested_evolve",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "nestedevo")
-        spark.conf.set("spark.sql.catalog.gne",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.gne.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "nestedevo")
+        GraftCatalog.register(spark, "gne", wh)
         spark.sql("CREATE TABLE gne.ns.t " +
           "(id BIGINT, payload STRUCT<a: BIGINT, b: STRING>)")
         Tables.events(spark, dir)
@@ -1604,10 +1553,8 @@ FROM events ORDER BY id""")),
     // read or written by any of the three ALTERs.
     QueryDef("q_column_mapping",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "colmap")
-        spark.conf.set("spark.sql.catalog.graftcm",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftcm.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "colmap")
+        GraftCatalog.register(spark, "graftcm", wh)
         val base = Tables.events(spark, dir)
         // v1: one schema generation committed as (event_id, event_type, value)
         writeHistory(base.filter(col("event_id") % 7 === 0)
@@ -1648,10 +1595,8 @@ ORDER BY event_id""")),
     // gated output as pinned literals.
     QueryDef("q_analyze_stats",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "analyze")
-        spark.conf.set("spark.sql.catalog.graftan",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftan.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "analyze")
+        GraftCatalog.register(spark, "graftan", wh)
         val base = Tables.events(spark, dir)
           .select(col("event_id"), col("event_type"), col("value"))
         (0 until 4).foreach { i =>
@@ -1701,10 +1646,8 @@ GROUP BY event_type ORDER BY event_type""")),
     // table with CAST.
     QueryDef("q_widen_type",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "widen")
-        spark.conf.set("spark.sql.catalog.graftwt",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftwt.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "widen")
+        GraftCatalog.register(spark, "graftwt", wh)
         val base = Tables.lineitem(spark, dir).select(
           col("l_orderkey").as("k"),
           col("l_linenumber").cast("int").as("num"),
@@ -1743,10 +1686,8 @@ FROM (
     // The data files of v1 stay on disk for time travel until vacuum.
     QueryDef("q_truncate_sql",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "truncsql")
-        spark.conf.set("spark.sql.catalog.grafttr",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.grafttr.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "truncsql")
+        GraftCatalog.register(spark, "grafttr", wh)
         val base = Tables.events(spark, dir)
           .select(col("event_id"), col("value"))
         writeHistory(base, s"$wh/wh/ev_t", "overwrite")
@@ -1785,10 +1726,8 @@ FROM (
     // RENAME, time-travel composition, record-format round-trip).
     QueryDef("q_sql_view",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "sqlview")
-        spark.conf.set("spark.sql.catalog.graftvw",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftvw.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "sqlview")
+        GraftCatalog.register(spark, "graftvw", wh)
         val base = Tables.orders(spark, dir).select(
           col("o_orderkey").as("k"), col("o_orderpriority").as("prio"),
           col("o_totalprice").as("price"))
@@ -1818,10 +1757,8 @@ GROUP BY o_orderpriority ORDER BY o_orderpriority""")),
     // a warehouse pays, deleted by layout.
     QueryDef("q_spj_join",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "spj")
-        spark.conf.set("spark.sql.catalog.graftsp",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftsp.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "spj")
+        GraftCatalog.register(spark, "graftsp", wh)
         spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
         def writeBucketed(df: DataFrame, name: String): Unit =
           df.repartition(8, graft.functions.GraftBucket.bucketId(col("k"), 8))
@@ -1860,10 +1797,8 @@ GROUP BY o_orderpriority ORDER BY o_orderpriority""")),
     // failure of the expired middle read.
     QueryDef("q_time_travel_tag",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "tagtt")
-        spark.conf.set("spark.sql.catalog.grafttg",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.grafttg.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "tagtt")
+        GraftCatalog.register(spark, "grafttg", wh)
         val base = Tables.events(spark, dir)
           .select(col("event_id"), col("value"))
         val t = s"$wh/wh/ev_t"
@@ -1904,10 +1839,8 @@ GROUP BY o_orderpriority ORDER BY o_orderpriority""")),
     // the rejection and the zero-partial-write contract.
     QueryDef("q_check_constraint",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "checkc")
-        spark.conf.set("spark.sql.catalog.graftck",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftck.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "checkc")
+        GraftCatalog.register(spark, "graftck", wh)
         spark.sql(
           "CREATE TABLE graftck.wh.ev_t (event_id BIGINT, value DOUBLE)")
         spark.sql("ALTER TABLE graftck.wh.ev_t " +
@@ -1955,10 +1888,8 @@ GROUP BY o_orderpriority ORDER BY o_orderpriority""")),
     // pre-replace data survives the overwrite bit-for-bit.
     QueryDef("q_replace_where",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "rwhere")
-        spark.conf.set("spark.sql.catalog.graftrw",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftrw.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "rwhere")
+        GraftCatalog.register(spark, "graftrw", wh)
         Tables.events(spark, dir)
           .select(col("event_id"), col("event_type"), col("value"))
           .repartitionByRange(8, col("event_id"))
@@ -2019,7 +1950,7 @@ ORDER BY snapshot, event_type""")),
     QueryDef("q_stream_backfill",
       (spark0, dir) => {
         val spark = graft.streaming.Streams.streamSession(spark0)
-        val t = freshTable(spark, dir, "backfill")
+        val t = Scratch.fresh(spark, dir, "backfill")
         val base = Tables.orders(spark, dir).select(
           col("o_orderkey").as("k"), col("o_orderpriority").as("prio"),
           col("o_totalprice").as("price"))
@@ -2065,10 +1996,8 @@ FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""")),
     // touched.
     QueryDef("q_mv_refresh",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "mvref")
-        spark.conf.set("spark.sql.catalog.graftmv",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftmv.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "mvref")
+        GraftCatalog.register(spark, "graftmv", wh)
         val base = Tables.events(spark, dir)
           .select(col("event_id"), col("event_type"), col("value"))
         base.filter(col("event_id") % 3 =!= 2)
@@ -2121,10 +2050,8 @@ ORDER BY event_type NULLS FIRST""")),
     // staleness degrades to correct-but-slower, never to wrong.
     QueryDef("q_mv_rewrite",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "mvrw")
-        spark.conf.set("spark.sql.catalog.graftmvrw",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftmvrw.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "mvrw")
+        GraftCatalog.register(spark, "graftmvrw", wh)
         val base = Tables.events(spark, dir)
           .select(col("event_id"), col("event_type"), col("value"))
         base.filter(col("event_id") % 5 =!= 0)
@@ -2147,7 +2074,7 @@ ORDER BY event_type NULLS FIRST""")),
               _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Aggregate])
             q.withColumn("phase", lit(name))
               .withColumn("used_mv", lit(usedMv))
-              .localCheckpoint()
+              .pinned()
           }
           val fresh = phase("fresh")
           // an un-refreshed append: the MV is now stale — full fallback
@@ -2186,7 +2113,7 @@ ORDER BY phase, event_type NULLS FIRST""")),
     // agree exactly.
     QueryDef("q_agg_pushdown",
       (spark, dir) => {
-        val t = freshTable(spark, dir, "aggpush")
+        val t = Scratch.fresh(spark, dir, "aggpush")
         Tables.orders(spark, dir)
           .select(col("o_orderkey").as("k"),
             col("o_orderpriority").as("prio"),
@@ -2235,10 +2162,8 @@ FROM orders""")),
     // rejection, and vacuum independence.
     QueryDef("q_clone_shallow",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "clone")
-        spark.conf.set("spark.sql.catalog.graftcl",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftcl.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "clone")
+        GraftCatalog.register(spark, "graftcl", wh)
         val base = Tables.events(spark, dir)
           .select(col("event_id"), col("event_type"), col("value"))
         def write(df: org.apache.spark.sql.DataFrame, path: String,
@@ -2301,7 +2226,7 @@ ORDER BY side, event_type NULLS FIRST""")),
     // degradation, codec hostility, and COW carry-forward).
     QueryDef("q_col_prune",
       (spark, dir) => {
-        val t = freshTable(spark, dir, "colprune")
+        val t = Scratch.fresh(spark, dir, "colprune")
         val base = Tables.orders(spark, dir).select(
           col("o_orderkey").as("k"),          // primary long (key)
           col("o_orderstatus").as("status"),  // primary string
@@ -2346,7 +2271,7 @@ GROUP BY o_orderstatus ORDER BY o_orderstatus""")),
     // parts, and gates both probes WITH their planned-part counts.
     QueryDef("q_null_prune",
       (spark, dir) => {
-        val t = freshTable(spark, dir, "nullprune")
+        val t = Scratch.fresh(spark, dir, "nullprune")
         val base = Tables.events(spark, dir)
           .filter(col("event_type").isNotNull)
           .select(col("event_id"),
@@ -2394,7 +2319,7 @@ ORDER BY which""")),
     // plan (ManifestAggScan, one synthetic partition).
     QueryDef("q_agg_count_col",
       (spark, dir) => {
-        val t = freshTable(spark, dir, "aggcount")
+        val t = Scratch.fresh(spark, dir, "aggcount")
         Tables.events(spark, dir)
           .filter(col("event_type").isNotNull)
           .select(col("event_id"),
@@ -2435,7 +2360,7 @@ FROM events WHERE event_type IS NOT NULL""")),
     // re-tightens sums over visible rows and restores the path).
     QueryDef("q_agg_sum_meta",
       (spark, dir) => {
-        val t = freshTable(spark, dir, "aggsum")
+        val t = Scratch.fresh(spark, dir, "aggsum")
         Tables.orders(spark, dir)
           .select(col("o_orderkey").as("k"), col("o_custkey").as("cust"))
           .repartition(6)
@@ -2471,7 +2396,7 @@ FROM orders""")),
     // values) and `parts_click` (the filtered scan plans exactly 1).
     QueryDef("q_split_layout",
       (spark, dir) => {
-        val t = freshTable(spark, dir, "splitlay")
+        val t = Scratch.fresh(spark, dir, "splitlay")
         Tables.events(spark, dir)
           .select(col("event_id"), col("event_type"), col("user_id"))
           .repartition(8)
@@ -2512,7 +2437,7 @@ FROM events WHERE event_type = 'click'""")),
     // scan (AggMetaSpec pins the decline ladder).
     QueryDef("q_agg_group_meta",
       (spark, dir) => {
-        val t = freshTable(spark, dir, "agggroup")
+        val t = Scratch.fresh(spark, dir, "agggroup")
         Tables.events(spark, dir)
           .select(col("event_id"), col("event_type"), col("user_id"))
           .repartition(8)
@@ -2555,14 +2480,12 @@ ORDER BY event_type NULLS FIRST""")),
     QueryDef("q_stream_mv",
       (spark0, dir) => {
         val spark = graft.streaming.Streams.streamSession(spark0)
-        val wh = freshTable(spark, dir, "streammv")
-        spark.conf.set("spark.sql.catalog.graftsmv",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftsmv.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "streammv")
+        GraftCatalog.register(spark, "graftsmv", wh)
         val base = Tables.events(spark, dir)
           .select(col("event_id"), col("event_type"), col("value"))
         val src = s"$wh/wh/src"
-        val feed = freshTable(spark, dir, "streammv-feed")
+        val feed = Scratch.fresh(spark, dir, "streammv-feed")
         def write(df: org.apache.spark.sql.DataFrame, path: String,
             mode: String): Unit =
           df.repartitionByRange(2, col("event_id"))
@@ -2583,8 +2506,8 @@ ORDER BY event_type NULLS FIRST""")),
           .format("graft.sources.ManifestSource").option("path", feed)
           .option("maxPartsPerTrigger", "2").load()
           .writeStream
-          .option("checkpointLocation", java.nio.file.Files
-            .createTempDirectory("graft-smv-ckpt-").toString)
+          .option("checkpointLocation",
+            Scratch.fresh(spark, dir, "streammv-ckpt"))
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .foreachBatch { (batch: org.apache.spark.sql.DataFrame,
               batchId: Long) =>
@@ -2636,10 +2559,8 @@ ORDER BY event_type NULLS FIRST""")),
     // the deterministic part counts.
     QueryDef("q_layout_evolve",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "layoutev")
-        spark.conf.set("spark.sql.catalog.graftle",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftle.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "layoutev")
+        GraftCatalog.register(spark, "graftle", wh)
         spark.sql("CREATE TABLE graftle.wh.ev_t " +
           "(event_id BIGINT, user_id BIGINT, value DOUBLE)")
         Tables.events(spark, dir)
@@ -2699,10 +2620,8 @@ FROM events""")),
     // against a branch, validate, publish as one metadata flip.
     QueryDef("q_wap_dml",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "wapdml")
-        spark.conf.set("spark.sql.catalog.graftwd",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftwd.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "wapdml")
+        GraftCatalog.register(spark, "graftwd", wh)
         val base = Tables.events(spark, dir)
           .select(col("event_id"), col("event_type"), col("value"))
         base.repartitionByRange(4, col("event_id"))
@@ -2760,10 +2679,8 @@ FROM events""")),
     // from-scratch restatement (bit-exact, not approximate).
     QueryDef("q_mv_minmax",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "mvmm")
-        spark.conf.set("spark.sql.catalog.graftmvx",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftmvx.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "mvmm")
+        GraftCatalog.register(spark, "graftmvx", wh)
         val base = Tables.events(spark, dir)
           .select(col("event_id"), col("event_type"), col("value"))
         def write(df: DataFrame, mode: String): Unit =
@@ -2797,7 +2714,7 @@ FROM events""")),
             .withColumn("fold_minus_parts", lit(r1.getInt(3)))
             .withColumn("recompute_minus_parts", lit(r2.getInt(3)))
             .orderBy(col("event_type"))
-            .localCheckpoint()
+            .pinned()
         } finally spark.conf.unset("graft.mv.rewrite")
       },
       Some(s"""SELECT event_type, CAST(count(*) AS BIGINT) AS n_rows,
@@ -2825,10 +2742,8 @@ GROUP BY event_type ORDER BY event_type NULLS FIRST""")),
     // affected groups' parts.
     QueryDef("q_mv_multikey",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "mvmk")
-        spark.conf.set("spark.sql.catalog.graftmvmk",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftmvmk.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "mvmk")
+        GraftCatalog.register(spark, "graftmvmk", wh)
         val base = Tables.events(spark, dir).select(
           col("event_id"),
           nullif(col("event_type"), lit("error")).as("etype"),
@@ -2867,7 +2782,7 @@ GROUP BY event_type ORDER BY event_type NULLS FIRST""")),
             .withColumn("fold_minus_parts", lit(r1.getInt(3)))
             .withColumn("recompute_minus_parts", lit(r2.getInt(3)))
             .orderBy(col("etype"), col("par"))
-            .localCheckpoint()
+            .pinned()
         } finally spark.conf.unset("graft.mv.rewrite")
       },
       Some(s"""SELECT etype, par, CAST(count(*) AS BIGINT) AS n_rows,
@@ -2899,10 +2814,8 @@ ORDER BY etype NULLS FIRST, par NULLS FIRST""")),
     // scan.
     QueryDef("q_mv_reagg",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "mvra")
-        spark.conf.set("spark.sql.catalog.graftmvra",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftmvra.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "mvra")
+        GraftCatalog.register(spark, "graftmvra", wh)
         val base = Tables.events(spark, dir).select(
           col("event_id"),
           nullif(col("event_type"), lit("error")).as("etype"),
@@ -2939,7 +2852,7 @@ ORDER BY etype NULLS FIRST, par NULLS FIRST""")),
               !graft.sources.MvRewrite.readsManifestDir(plan, s"$wh/wh/src")
           q.withColumn("used_mv", lit(usedMv))
             .orderBy(col("etype"))
-            .localCheckpoint()
+            .pinned()
         } finally spark.conf.unset("graft.mv.rewrite")
       },
       Some(s"""SELECT etype, CAST(count(*) AS BIGINT) AS n_rows,
@@ -2974,10 +2887,8 @@ ORDER BY etype NULLS FIRST""")),
     // bytes per group serving state, refresh cost O(changed parts).
     QueryDef("q_mv_distinct",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "mvnd")
-        spark.conf.set("spark.sql.catalog.graftmvnd",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftmvnd.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "mvnd")
+        GraftCatalog.register(spark, "graftmvnd", wh)
         val base = Tables.events(spark, dir).select(
           col("event_id"),
           nullif(col("event_type"), lit("error")).as("etype"),
@@ -3007,7 +2918,7 @@ ORDER BY etype NULLS FIRST""")),
         val truth = spark.sql("""SELECT etype,
             hll_sketch_estimate(hll_sketch_agg(user_id)) AS direct_est,
             count(DISTINCT user_id) AS ndv_exact
-          FROM graftmvnd.wh.src GROUP BY etype""").localCheckpoint()
+          FROM graftmvnd.wh.src GROUP BY etype""").pinned()
         spark.conf.set("graft.mv.rewrite", s"$wh/wh/mv")
         try {
           val q = spark.sql("""SELECT etype, count(*) AS n_rows,
@@ -3030,7 +2941,7 @@ ORDER BY etype NULLS FIRST""")),
             .withColumn("fold_minus_parts", lit(r1.getInt(3)))
             .withColumn("recompute_minus_parts", lit(r2.getInt(3)))
             .orderBy(col("etype"))
-            .localCheckpoint()
+            .pinned()
         } finally spark.conf.unset("graft.mv.rewrite")
       },
       Some(s"""SELECT etype, CAST(count(*) AS BIGINT) AS n_rows,
@@ -3061,10 +2972,8 @@ GROUP BY etype ORDER BY etype NULLS FIRST""")),
     // maintenance.
     QueryDef("q_mv_timegrain",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "mvtg")
-        spark.conf.set("spark.sql.catalog.graftmtg",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftmtg.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "mvtg")
+        GraftCatalog.register(spark, "graftmtg", wh)
         val base = Tables.events(spark, dir)
           .select(col("event_id"), col("ts"), col("value"))
         def write(df: DataFrame, mode: String): Unit =
@@ -3102,7 +3011,7 @@ GROUP BY etype ORDER BY etype NULLS FIRST""")),
             .withColumn("fold_minus_parts", lit(r1.getInt(3)))
             .withColumn("recompute_minus_parts", lit(r2.getInt(3)))
             .orderBy(col("day_ts"))
-            .localCheckpoint()
+            .pinned()
         } finally spark.conf.unset("graft.mv.rewrite")
       },
       Some(s"""SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day_ts,
@@ -3129,7 +3038,7 @@ GROUP BY 1 ORDER BY day_ts""")),
     // lives on. The joined rollup is restated exactly by the oracle.
     QueryDef("q_split_prune",
       (spark, dir) => {
-        val t = freshTable(spark, dir, "splitpr")
+        val t = Scratch.fresh(spark, dir, "splitpr")
         Tables.events(spark, dir)
           .select(col("event_id"), col("event_type"), col("user_id"))
           .repartition(8)
@@ -3199,10 +3108,8 @@ FROM events WHERE event_type IN ('click', 'view')""")),
     // migration, hours() variant).
     QueryDef("q_layout_time",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "timelay")
-        spark.conf.set("spark.sql.catalog.graftlt",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftlt.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "timelay")
+        GraftCatalog.register(spark, "graftlt", wh)
         spark.sql("CREATE TABLE graftlt.wh.ev (event_id BIGINT, " +
           "ts TIMESTAMP, user_id BIGINT, value DOUBLE) " +
           "PARTITIONED BY (days(ts))")
@@ -3275,10 +3182,8 @@ FROM events WHERE event_type IN ('click', 'view')""")),
     // travels through staged reads), keyed by stable field id.
     QueryDef("q_column_default",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "coldef")
-        spark.conf.set("spark.sql.catalog.graftcd",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftcd.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "coldef")
+        GraftCatalog.register(spark, "graftcd", wh)
         spark.sql("CREATE TABLE graftcd.wh.ev (event_id BIGINT, " +
           "event_type STRING, value DOUBLE, src STRING DEFAULT 'ingest')")
         Tables.events(spark, dir)
@@ -3337,10 +3242,8 @@ GROUP BY region, src ORDER BY region, src""")),
     // from scratch both before and after compaction.
     QueryDef("q_delete_eq",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "eqdel")
-        spark.conf.set("spark.sql.catalog.graftde",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftde.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "eqdel")
+        GraftCatalog.register(spark, "graftde", wh)
         spark.sql("CREATE TABLE graftde.wh.ev (event_id BIGINT, " +
           "event_type STRING, user_id BIGINT, value DOUBLE)")
         Tables.events(spark, dir)
@@ -3389,7 +3292,7 @@ GROUP BY region, src ORDER BY region, src""")),
           .withColumn("meta_declined_pending", lit(!metaPending))
           .withColumn("meta_rearmed_after", lit(metaAfter))
           .withColumn("clauses_after_compact", lit(clausesAfter))
-          .localCheckpoint()
+          .pinned()
       },
       Some(s"""SELECT CAST(count(*) AS BIGINT) AS n_rows,
   ${Exact.decSumSql("value", 6)} AS sum_value,
@@ -3425,10 +3328,8 @@ WHERE event_id NOT IN (5, 6) AND event_type <> 'error'""")),
     // from-scratch restatement.
     QueryDef("q_delete_eq_range",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "eqrange")
-        spark.conf.set("spark.sql.catalog.graftder",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftder.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "eqrange")
+        GraftCatalog.register(spark, "graftder", wh)
         spark.sql("CREATE TABLE graftder.wh.ev (ts BIGINT, " +
           "event_type STRING, value DOUBLE)")
         val src = Tables.events(spark, dir).select(
@@ -3485,7 +3386,7 @@ WHERE event_id NOT IN (5, 6) AND event_type <> 'error'""")),
           .withColumn("one_commit", lit(oneCommit))
           .withColumn("n_pre_delete", lit(preDelete))
           .withColumn("meta_declined_pending", lit(metaDeclined))
-          .localCheckpoint()
+          .pinned()
       },
       Some(s"""SELECT CAST(count(*) AS BIGINT) AS n_rows,
   ${Exact.decSumSql("value", 6)} AS sum_value,
@@ -3518,10 +3419,8 @@ WHERE event_id >= (SELECT (max(event_id) * 6) // 10 FROM events)""")),
     // O(1) parts whose filters admit it.
     QueryDef("q_bloom_secondary",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "bloom2")
-        spark.conf.set("spark.sql.catalog.graftbl",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftbl.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "bloom2")
+        GraftCatalog.register(spark, "graftbl", wh)
         // bloom_bits raised to 2^18: at sf0.1 each of the 8 parts
         // holds ~12.5k distinct URLs, which saturates the default
         // 2^16 filter to ~8% FP — sizing is the declared, honest
@@ -3533,18 +3432,14 @@ WHERE event_id >= (SELECT (max(event_id) * 6) // 10 FROM events)""")),
         spark.sql("CREATE TABLE graftbl.wh.docs_nb (event_id BIGINT, " +
           "url STRING, value DOUBLE)")
         // the 8-part md5 source feeds TWO inserts (bloom table + its
-        // range-only twin): localCheckpoint computes the hash + the
-        // repartition exchange once; both writes read the blocks
-        // (guide §5 — r21 alternating pairs: 2.58 vs 2.74 s mean,
-        // within local noise; kept on the structural ground that one
-        // compute replaces two, which is what matters at real scale)
+        // range-only twin). Pinning it once measured within noise
+        // (r21 alternating pairs: 2.58 vs 2.74 s mean) and was reverted.
         Tables.events(spark, dir)
           .select(col("event_id"),
             concat(lit("u-"), md5(col("event_id").cast("string")))
               .as("url"),
             col("value"))
           .repartition(8, col("event_id"))
-          .localCheckpoint()
           .createOrReplaceTempView("graft_bloom2_src")
         spark.sql("INSERT INTO graftbl.wh.docs SELECT * FROM graft_bloom2_src")
         spark.sql(
@@ -3557,9 +3452,7 @@ WHERE event_id >= (SELECT (max(event_id) * 6) // 10 FROM events)""")),
               .BatchScanExec => b
           }.head.metrics("partsPlanned").value
         }
-        val target = "u-" + java.security.MessageDigest.getInstance("MD5")
-          .digest("42".getBytes("UTF-8"))
-          .map("%02x".format(_)).mkString
+        val target = "u-a1d0c6e83f027327d8461063f4ac58a6" // event 42: u- || md5('42')
         val hitValue = spark.sql(
           s"SELECT value FROM graftbl.wh.docs WHERE url = '$target'")
           .head.getDouble(0)
@@ -3610,10 +3503,8 @@ WHERE event_id >= (SELECT (max(event_id) * 6) // 10 FROM events)""")),
     // range spans deleted rows) while visible_rows is exact.
     QueryDef("q_meta_partitions",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "metap")
-        spark.conf.set("spark.sql.catalog.graftmp",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftmp.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "metap")
+        GraftCatalog.register(spark, "graftmp", wh)
         spark.sql("CREATE TABLE graftmp.wh.ev (event_id BIGINT, " +
           "event_type STRING, user_id BIGINT) " +
           "PARTITIONED BY (event_type)")
@@ -3652,10 +3543,8 @@ FROM events GROUP BY event_type ORDER BY part_id""")),
     // spanning every file). The box answer itself is gated exactly.
     QueryDef("q_call_zorder",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "callz")
-        spark.conf.set("spark.sql.catalog.graftzo",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftzo.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "callz")
+        GraftCatalog.register(spark, "graftzo", wh)
         val base = Tables.events(spark, dir)
           .select(col("event_id"), col("user_id"), col("value"))
         val t = s"$wh/wh/ev_t"
@@ -3705,10 +3594,8 @@ WHERE event_id <= (SELECT max(event_id) // 4 FROM events)
     // rewrite the hash layout spans every part on both columns.
     QueryDef("q_zorder_string",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "zstr")
-        spark.conf.set("spark.sql.catalog.graftzs",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftzs.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "zstr")
+        GraftCatalog.register(spark, "graftzs", wh)
         val base = Tables.documents(spark, dir)
           .select(col("doc_id"), col("source"), col("n_chars"))
         val t = s"$wh/wh/docs"
@@ -3755,10 +3642,8 @@ WHERE source <= 'src12'
     // the commit is one manifest rename at any table size.
     QueryDef("q_ctas",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "ctas")
-        spark.conf.set("spark.sql.catalog.graftct",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftct.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "ctas")
+        GraftCatalog.register(spark, "graftct", wh)
         Tables.events(spark, dir)
           .select(col("event_id"), col("event_type"), col("value"))
           .createOrReplaceTempView("graft_ctas_src")
@@ -3819,10 +3704,8 @@ FROM events""")),
     QueryDef("q_stream_sink",
       (spark0, dir) => {
         val spark = graft.streaming.Streams.streamSession(spark0)
-        val wh = freshTable(spark, dir, "streamsink")
-        spark.conf.set("spark.sql.catalog.graftss",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftss.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "streamsink")
+        GraftCatalog.register(spark, "graftss", wh)
         val bronze = s"$wh/wh/bronze"
         val base = Tables.orders(spark, dir).select(
           col("o_orderkey").as("k"), col("o_orderpriority").as("prio"),
@@ -3840,8 +3723,8 @@ FROM events""")),
           .load()
           .filter(col("price") > 1000.0)
           .writeStream
-          .option("checkpointLocation", java.nio.file.Files
-            .createTempDirectory("graft-ssink-ckpt-").toString)
+          .option("checkpointLocation",
+            Scratch.fresh(spark, dir, "streamsink-ckpt"))
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .toTable("graftss.wh.silver")
         q.awaitTermination()
@@ -3876,10 +3759,8 @@ GROUP BY o_orderpriority ORDER BY o_orderpriority""")),
     // that partition's write + one manifest commit.
     QueryDef("q_overwrite_partition",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "owpart")
-        spark.conf.set("spark.sql.catalog.graftop",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftop.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "owpart")
+        GraftCatalog.register(spark, "graftop", wh)
         spark.sql("CREATE TABLE graftop.wh.ev " +
           "(event_id BIGINT, value DOUBLE, etype STRING) " +
           "PARTITIONED BY (etype)")
@@ -3924,10 +3805,8 @@ FROM cur GROUP BY etype ORDER BY etype""")),
     // match), gated against the oracle's restatement of both steps.
     QueryDef("q_dml_subquery",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "dmlsub")
-        spark.conf.set("spark.sql.catalog.graftds",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftds.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "dmlsub")
+        GraftCatalog.register(spark, "graftds", wh)
         Tables.orders(spark, dir)
           .select(col("o_orderkey").as("k"),
             col("o_orderpriority").as("prio"),
@@ -3980,10 +3859,8 @@ FROM relabeled GROUP BY prio ORDER BY prio""")),
     // O(parts) driver metadata at any table size.
     QueryDef("q_show_partitions",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "showpart")
-        spark.conf.set("spark.sql.catalog.graftshp",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftshp.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "showpart")
+        GraftCatalog.register(spark, "graftshp", wh)
         spark.sql("CREATE TABLE graftshp.wh.ev " +
           "(event_id BIGINT, value DOUBLE, etype STRING) " +
           "PARTITIONED BY (etype)")
@@ -4025,10 +3902,8 @@ ORDER BY partition""")),
     // new name, plus the old-name-gone flag.
     QueryDef("q_rename_table",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "renametab")
-        spark.conf.set("spark.sql.catalog.graftrn",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftrn.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "renametab")
+        GraftCatalog.register(spark, "graftrn", wh)
         spark.sql("CREATE TABLE graftrn.wh.ev_old " +
           "(event_id BIGINT, value DOUBLE)")
         Tables.events(spark, dir)
@@ -4070,10 +3945,8 @@ FROM events""")),
     // are pure driver metadata at any table size.
     QueryDef("q_tblproperties",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "tblprops")
-        spark.conf.set("spark.sql.catalog.grafttp",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.grafttp.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "tblprops")
+        GraftCatalog.register(spark, "grafttp", wh)
         spark.sql("CREATE TABLE grafttp.wh.t (k BIGINT, v DOUBLE) " +
           "TBLPROPERTIES ('team' = 'data-eng', 'pii' = 'unknown')")
         spark.sql("ALTER TABLE grafttp.wh.t SET TBLPROPERTIES " +
@@ -4114,10 +3987,8 @@ ORDER BY key""")),
     // + literal-true contract booleans.
     QueryDef("q_show_create",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "showct")
-        spark.conf.set("spark.sql.catalog.graftsc",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftsc.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "showct")
+        GraftCatalog.register(spark, "graftsc", wh)
         spark.sql("CREATE TABLE graftsc.wh.src (k BIGINT, " +
           "prio STRING DEFAULT 'NONE', price DOUBLE) " +
           "PARTITIONED BY (bucket(4, k)) " +
@@ -4172,10 +4043,8 @@ FROM orders WHERE o_orderkey % 7 = 0""")),
     // metadata commit + the merge's own footprint, never a backfill.
     QueryDef("q_merge_evolve",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "mrgev")
-        spark.conf.set("spark.sql.catalog.graftme",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftme.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "mrgev")
+        GraftCatalog.register(spark, "graftme", wh)
         val base = Tables.orders(spark, dir).select(
           col("o_orderkey").as("k"), col("o_totalprice").as("price"))
         base.filter(col("k") % 2 === 0)
@@ -4245,10 +4114,8 @@ FROM merged""")),
     // snapshots and diverged schemas refuse loudly (CherrypickSpec).
     QueryDef("q_cherrypick",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "cherrypick")
-        spark.conf.set("spark.sql.catalog.graftcp",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftcp.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "cherrypick")
+        GraftCatalog.register(spark, "graftcp", wh)
         val base = Tables.events(spark, dir)
           .select(col("event_id"), col("value"))
         val t = s"$wh/wh/ev_t"
@@ -4301,10 +4168,8 @@ FROM merged""")),
     // ALWAYS refuses explicit values, BY DEFAULT keeps them.
     QueryDef("q_identity_col",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "identity")
-        spark.conf.set("spark.sql.catalog.graftid",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftid.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "identity")
+        GraftCatalog.register(spark, "graftid", wh)
         spark.sql("CREATE TABLE graftid.wh.t (" +
           "id BIGINT GENERATED ALWAYS AS IDENTITY " +
           "(START WITH 100 INCREMENT BY 3), v DOUBLE, tag STRING)")
@@ -4359,10 +4224,8 @@ FROM merged""")),
     // rides each insert's shuffle, reads prune forever.
     QueryDef("q_cluster_by",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "clusterby")
-        spark.conf.set("spark.sql.catalog.graftcb",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftcb.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "clusterby")
+        GraftCatalog.register(spark, "graftcb", wh)
         spark.sql("CREATE TABLE graftcb.wh.ev " +
           "(event_id BIGINT, value DOUBLE) CLUSTER BY (event_id)")
         Tables.events(spark, dir)
@@ -4394,10 +4257,8 @@ FROM events""")),
     // plan is the same append.
     QueryDef("q_insert_by_name",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "insbyname")
-        spark.conf.set("spark.sql.catalog.graftbn",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftbn.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "insbyname")
+        GraftCatalog.register(spark, "graftbn", wh)
         spark.sql("CREATE TABLE graftbn.wh.ord " +
           "(k BIGINT, prio STRING, price DOUBLE)")
         Tables.orders(spark, dir)
@@ -4434,10 +4295,8 @@ GROUP BY prio ORDER BY prio""")),
     // files-in-dir) driver metadata at any table size.
     QueryDef("q_orphan_files",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "orphanfiles")
-        spark.conf.set("spark.sql.catalog.graftof",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftof.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "orphanfiles")
+        GraftCatalog.register(spark, "graftof", wh)
         val base = Tables.events(spark, dir)
           .select(col("event_id"), col("value"))
         val t = s"$wh/wh/ev_t"
@@ -4481,10 +4340,8 @@ GROUP BY prio ORDER BY prio""")),
     // — the strongest possible cross-engine check of compute-on-write.
     QueryDef("q_generated_col",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "generated")
-        spark.conf.set("spark.sql.catalog.graftgc",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftgc.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "generated")
+        GraftCatalog.register(spark, "graftgc", wh)
         spark.sql("""CREATE TABLE graftgc.wh.ord (
           k BIGINT, p STRING, v DOUBLE,
           gross DOUBLE GENERATED ALWAYS AS (v * CAST(2 AS DOUBLE)),
@@ -4523,10 +4380,8 @@ FROM orders ORDER BY k""")),
     // exactly, and the pre-compact snapshot stays readable.
     QueryDef("q_compact_partition",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "compactpart")
-        spark.conf.set("spark.sql.catalog.graftcw",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftcw.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "compactpart")
+        GraftCatalog.register(spark, "graftcw", wh)
         spark.sql("CREATE TABLE graftcw.wh.ev " +
           "(event_id BIGINT, value DOUBLE, etype STRING) " +
           "PARTITIONED BY (etype)")
@@ -4577,10 +4432,8 @@ FROM orders ORDER BY k""")),
     // listing plus KB version headers at any table size.
     QueryDef("q_meta_refs",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "metarefs")
-        spark.conf.set("spark.sql.catalog.graftmr",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftmr.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "metarefs")
+        GraftCatalog.register(spark, "graftmr", wh)
         val base = Tables.events(spark, dir)
           .select(col("event_id"), col("value"))
         val t = s"$wh/wh/ev_t"
@@ -4627,10 +4480,8 @@ ORDER BY type, name""")),
     // idempotence) and the foreign-commit refusals.
     QueryDef("q_txn_multi",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "txnmulti")
-        spark.conf.set("spark.sql.catalog.gtxn",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.gtxn.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "txnmulti")
+        GraftCatalog.register(spark, "gtxn", wh)
         val ev = Tables.events(spark, dir)
           .select(col("event_id"), col("event_type"), col("value"))
         val ta = s"$wh/ns/bronze"
@@ -4710,10 +4561,8 @@ ORDER BY type, name""")),
     // decline ladder (stale fact, moved dim, wrong join columns).
     QueryDef("q_mv_join",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "mvjoin")
-        spark.conf.set("spark.sql.catalog.gmvj",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.gmvj.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "mvjoin")
+        GraftCatalog.register(spark, "gmvj", wh)
         val fact = Tables.events(spark, dir)
           .select(col("event_id"), (col("user_id") % 25).as("fk"),
             col("value"))
@@ -4786,10 +4635,8 @@ GROUP BY n.n_name ORDER BY n.n_name""")),
     // the gate proves the meters report truth, not plausible numbers.
     QueryDef("q_scan_metrics",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "scanmetrics")
-        spark.conf.set("spark.sql.catalog.gsmq",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.gsmq.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "scanmetrics")
+        GraftCatalog.register(spark, "gsmq", wh)
         val t = s"$wh/ns/m"
         val ev = Tables.events(spark, dir)
           .filter(col("event_id") < 1000)
@@ -4861,10 +4708,8 @@ GROUP BY n.n_name ORDER BY n.n_name""")),
     // whole-table width guess.
     QueryDef("q_stats_broadcast",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "statsbcast")
-        spark.conf.set("spark.sql.catalog.gsb",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.gsb.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "statsbcast")
+        GraftCatalog.register(spark, "gsb", wh)
         Tables.events(spark, dir)
           .select(col("event_id").as("k"), col("value"))
           .repartitionByRange(8, col("k"))
@@ -4923,10 +4768,8 @@ WHERE e.event_id >= 100 AND e.event_id < 200""")),
     // ingest buys every scan's pruning.
     QueryDef("q_write_ordered",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "writeordered")
-        spark.conf.set("spark.sql.catalog.gwo",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.gwo.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "writeordered")
+        GraftCatalog.register(spark, "gwo", wh)
         spark.sql("CREATE TABLE gwo.ns.ord (k BIGINT, v DOUBLE)")
         spark.sql("CALL gwo.system.set_layout(table => 'ns.ord', " +
           "spec => 'none', order_by => 'k')")
@@ -4994,10 +4837,8 @@ WHERE e.event_id >= 100 AND e.event_id < 200""")),
     // newest 100 rows" opening 1 part instead of sorting the table.
     QueryDef("q_topk_pushdown",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "topkpush")
-        spark.conf.set("spark.sql.catalog.gtk",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.gtk.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "topkpush")
+        GraftCatalog.register(spark, "gtk", wh)
         spark.sql("CREATE TABLE gtk.ns.ord (k BIGINT, v DOUBLE)")
         spark.sql("CALL gtk.system.set_layout(table => 'ns.ord', " +
           "spec => 'none', order_by => 'k')")
@@ -5062,10 +4903,8 @@ FROM events ORDER BY k LIMIT 10""")),
     // scheduler issues; the part count is the derived detail.
     QueryDef("q_compact_bytes",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "compactbytes")
-        spark.conf.set("spark.sql.catalog.gcb",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.gcb.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "compactbytes")
+        GraftCatalog.register(spark, "gcb", wh)
         Tables.events(spark, dir)
           .select(col("event_id").as("k"), col("event_type"), col("value"))
           .repartitionByRange(8, col("k"))
@@ -5108,7 +4947,7 @@ FROM events""")),
     // consumer skips the historical terabytes it doesn't want.
     QueryDef("q_stream_tail",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "streamtail")
+        val wh = Scratch.fresh(spark, dir, "streamtail")
         val tbl = s"$wh/ns/t"
         val base = Tables.events(spark, dir)
           .select(col("event_id"), col("event_type"))
@@ -5157,10 +4996,8 @@ WHERE event_id % 2 <> 0 ORDER BY event_id""")),
     QueryDef("q_stream_txn",
       (spark0, dir) => {
         val spark = graft.streaming.Streams.streamSession(spark0)
-        val wh = freshTable(spark, dir, "streamtxn")
-        spark.conf.set("spark.sql.catalog.gstx",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.gstx.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "streamtxn")
+        GraftCatalog.register(spark, "gstx", wh)
         val bronze = s"$wh/ns/bronze"
         val silver = s"$wh/ns/silver"
         val audit = s"$wh/ns/audit"
@@ -5176,8 +5013,8 @@ WHERE event_id % 2 <> 0 ORDER BY event_id""")),
           .option("maxPartsPerTrigger", "4").load()
           .filter(col("price") > 1000.0)
           .writeStream
-          .option("checkpointLocation", java.nio.file.Files
-            .createTempDirectory("graft-stxn-ckpt-").toString)
+          .option("checkpointLocation",
+            Scratch.fresh(spark, dir, "streamtxn-ckpt"))
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .foreachBatch { (batch: DataFrame, batchId: Long) =>
             val id = f"ep$batchId%05d"
@@ -5249,10 +5086,8 @@ GROUP BY o_orderpriority ORDER BY o_orderpriority""")),
     // groups) of MV state instead of rescanning the fact table.
     QueryDef("q_mv_route_reagg",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "mvroutereagg")
-        spark.conf.set("spark.sql.catalog.gmrr",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.gmrr.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "mvroutereagg")
+        GraftCatalog.register(spark, "gmrr", wh)
         Tables.events(spark, dir)
           .select(col("event_id"), col("event_type"),
             (col("user_id") % 4).as("par"), col("value"))
@@ -5285,7 +5120,7 @@ GROUP BY o_orderpriority ORDER BY o_orderpriority""")),
             .withColumn("routed", lit(routed))
             .withColumn("nonkey_declines", lit(nonkeyDeclines))
             .orderBy(col("par"))
-            .localCheckpoint()
+            .pinned()
         } finally spark.conf.unset("graft.mv.rewrite")
       },
       Some(s"""SELECT user_id % 4 AS par, CAST(count(*) AS BIGINT) AS n,
@@ -5308,10 +5143,8 @@ GROUP BY user_id % 4 ORDER BY par""")),
     // load-bearing). Answers restate from the raw table either way.
     QueryDef("q_mv_route_filter",
       (spark, dir) => {
-        val wh = freshTable(spark, dir, "mvroutef")
-        spark.conf.set("spark.sql.catalog.gmrf",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.gmrf.warehouse", wh)
+        val wh = Scratch.fresh(spark, dir, "mvroutef")
+        GraftCatalog.register(spark, "gmrf", wh)
         Tables.events(spark, dir)
           .select(col("event_id"), col("event_type"), col("value"))
           .repartitionByRange(4, col("event_id"))
@@ -5344,7 +5177,7 @@ GROUP BY user_id % 4 ORDER BY par""")),
             .withColumn("routed", lit(routed))
             .withColumn("nonkey_declines", lit(nonkeyDeclines))
             .orderBy(col("event_type"))
-            .localCheckpoint()
+            .pinned()
         } finally spark.conf.unset("graft.mv.rewrite")
       },
       Some(s"""SELECT event_type, CAST(count(*) AS BIGINT) AS n,

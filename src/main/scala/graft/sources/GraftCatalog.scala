@@ -18,12 +18,22 @@ import org.apache.spark.sql.types.{ByteType, DataType, DecimalType, IntegerType,
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.util.SerializableConfiguration
 
+object GraftCatalog {
+  /** Registers catalog `name` over `warehouse` on the session: the
+    * `spark.sql.catalog.<name>` = "graft.sources.GraftCatalog" plus
+    * `spark.sql.catalog.<name>.warehouse` pair. */
+  def register(spark: org.apache.spark.sql.SparkSession, name: String,
+      warehouse: String): Unit = {
+    spark.conf.set(s"spark.sql.catalog.$name", "graft.sources.GraftCatalog")
+    spark.conf.set(s"spark.sql.catalog.$name.warehouse", warehouse)
+  }
+}
+
 /** DataSource V2 `TableCatalog` over a directory of manifest tables —
   * the piece that makes the engine's own table format SQL-ADDRESSABLE:
   *
   * {{{
-  *   spark.conf.set("spark.sql.catalog.graftcat", "graft.sources.GraftCatalog")
-  *   spark.conf.set("spark.sql.catalog.graftcat.warehouse", "/path/wh")
+  *   GraftCatalog.register(spark, "graftcat", "/path/wh")
   *   spark.sql("SELECT * FROM graftcat.wh.orders WHERE k > 10")
   *   spark.sql("INSERT INTO graftcat.wh.orders SELECT ...")
   * }}}

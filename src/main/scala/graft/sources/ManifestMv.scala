@@ -8,6 +8,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.util.Pin.PinOps
+
 /** MATERIALIZED VIEWS with INCREMENTAL refresh over the manifest
   * format — the warehouse answer to "this rollup is asked a thousand
   * times a day over a table that changes a little": materialize the
@@ -472,7 +474,7 @@ private[sources] object ManifestMv {
       // O(groups) rows once instead of recomputing that subtree per
       // consumer (optimization r20; guide §5 localCheckpoint to cut
       // duplicated lineage)
-      val folded = if (needRecompute) folded0.localCheckpoint()
+      val folded = if (needRecompute) folded0.pinned()
         else folded0
       val merged = if (!needRecompute) folded else {
         // GROUP-SCOPED RESCAN for the affected keys only: a delete

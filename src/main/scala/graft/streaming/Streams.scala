@@ -9,6 +9,8 @@ import org.apache.spark.sql.streaming.Trigger
 import graft.functions.Exact
 import graft.model.Tables
 import graft.queries.QueryDef
+import graft.sources.GraftCatalog
+import graft.util.Scratch
 
 /** Structured Streaming surface over the events feed.
   *
@@ -322,10 +324,9 @@ ORDER BY c.user_id""")),
         // GETTER (expired reads absent), not in background cleanup
         spark.conf.set(nd, "false")
         try {
-          val stage = Files.createTempDirectory("graft-ttl-stage-").toString
-          val ckpt = Files.createTempDirectory("graft-ttl-ckpt-").toString
-          val out1 = Files.createTempDirectory("graft-ttl-o1-").toString
-          val out2 = Files.createTempDirectory("graft-ttl-o2-").toString
+          val root = Scratch.fresh(spark, dir, "stream-ttl")
+          val (stage, ckpt, out1, out2) =
+            (s"$root/stage", s"$root/ckpt", s"$root/o1", s"$root/o2")
           val src = Tables.events(spark, dir)
             .select(col("user_id"), col("event_id"), col("value"))
           src.coalesce(1).write.mode("append").parquet(stage)
@@ -426,14 +427,7 @@ GROUP BY user_id ORDER BY user_id""")),
     // not just sink output, are exactly right.
     QueryDef("q_state_reader",
       (spark, dir) => {
-        val key = java.security.MessageDigest.getInstance("MD5")
-          .digest((dir + "#statereader").getBytes("UTF-8"))
-          .map("%02x".format(_)).mkString
-        val ckpt = s"${spark.conf.get("spark.sql.warehouse.dir")}" +
-          s"/graft-state-ckpt/$key"
-        val p = new org.apache.hadoop.fs.Path(ckpt)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(p)) fs.delete(p, true) // idempotent reruns
+        val ckpt = Scratch.fresh(spark, dir, "state-reader")
         val agg = eventsStream(spark, dir)
           .groupBy(col("user_id")).agg(count(lit(1)).as("n"))
         val q = agg.writeStream.format("memory")
@@ -719,7 +713,8 @@ ORDER BY p.user_id, p_id, c_id NULLS FIRST""")),
     // explicit, so any merge order converges.
     QueryDef("q_stream_upsert",
       (spark, dir) => {
-        val target = Files.createTempDirectory("graft-upsert-").toString + "/state"
+        val root = Scratch.fresh(spark, dir, "stream-upsert")
+        val target = s"$root/state"
         val latest = (df: DataFrame) => df
           .groupBy(col("user_id"))
           .agg(max_by(struct(col("ts"), col("event_id"), col("value")),
@@ -729,14 +724,14 @@ ORDER BY p.user_id, p_id, c_id NULLS FIRST""")),
         val q = eventsStream(spark, dir).writeStream
           .outputMode("append")
           .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation",
-            Files.createTempDirectory("graft-upsert-ckpt-").toString)
+          .option("checkpointLocation", s"$root/ckpt")
           .foreachBatch { (batch: DataFrame, _: Long) =>
             val spark0 = batch.sparkSession
             val proj = batch.select(col("user_id"), col("ts"),
               col("event_id"), col("value"))
+            val tp = new org.apache.hadoop.fs.Path(target)
             val existing =
-              if (new java.io.File(target).exists)
+              if (tp.getFileSystem(spark0.sessionState.newHadoopConf()).exists(tp))
                 spark0.read.parquet(target)
               else proj.limit(0)
             val merged = latest(existing.unionByName(proj)).cache()
@@ -772,12 +767,12 @@ ORDER BY p.user_id, p_id, c_id NULLS FIRST""")),
     // the stream into micro-batches.
     QueryDef("q_stream_sink_manifest",
       (spark, dir) => {
-        val target = Files.createTempDirectory("graft-stream-sink-").toString
+        val root = Scratch.fresh(spark, dir, "stream-sink-manifest")
+        val target = s"$root/sink"
         val q = eventsStream(spark, dir).writeStream
           .outputMode("append")
           .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation",
-            Files.createTempDirectory("graft-ssink-ckpt-").toString)
+          .option("checkpointLocation", s"$root/ckpt")
           .foreachBatch { (batch: DataFrame, batchId: Long) =>
             batch.select(col("event_id"), col("event_type"), col("value"))
               .write.format("graft.sources.ManifestSink")
@@ -789,7 +784,8 @@ ORDER BY p.user_id, p_id, c_id NULLS FIRST""")),
           .start()
         q.awaitTermination()
         val conf = spark.sparkContext.hadoopConfiguration
-        val parts = new java.io.File(target).listFiles()
+        val tp = new org.apache.hadoop.fs.Path(target)
+        val parts = tp.getFileSystem(conf).listStatus(tp).map(_.getPath)
           .filter(_.getName.startsWith("batch-")).toSeq
           .flatMap(b => graft.sources.ManifestSink.readManifest(conf, b.toString))
         val nonEmpty = parts.filter(_._2 > 0)
@@ -844,9 +840,9 @@ FROM events""")),
           .as("mx"))))
           .withColumn("cut", col("mx") - expr("INTERVAL 15 DAYS"))
         def stageOne(df: DataFrame, name: String): Unit = {
-          val tmp = Files.createTempDirectory("graft-late-").toString
+          val tmp = Scratch.fresh(spark, dir, "stream-late-part")
           df.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
+          val part = new java.io.File(tmp.stripPrefix("file:")).listFiles()
             .map(_.toString).filter(_.endsWith(".parquet")).head
           Files.createDirectories(stage)
           Files.move(java.nio.file.Paths.get(part), stage.resolve(name),
@@ -930,11 +926,9 @@ ORDER BY window_start_us, event_type""")),
     // commits deltas.
     QueryDef("q_stream_merge_mor",
       (spark, dir) => {
-        val wh = Files.createTempDirectory("graft-smm-").toString
+        val wh = Scratch.fresh(spark, dir, "stream-merge-mor")
         val stageDir = s"$wh/stage"
-        spark.conf.set("spark.sql.catalog.graftsmm",
-          "graft.sources.GraftCatalog")
-        spark.conf.set("spark.sql.catalog.graftsmm.warehouse", wh)
+        GraftCatalog.register(spark, "graftsmm", wh)
         spark.sql(
           """CREATE TABLE graftsmm.wh.latest
              (user_id BIGINT, ts_us BIGINT, event_id BIGINT, value DOUBLE)""")
@@ -951,8 +945,7 @@ ORDER BY window_start_us, event_type""")),
           .writeStream
           .outputMode("append")
           .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation",
-            Files.createTempDirectory("graft-smm-ckpt-").toString)
+          .option("checkpointLocation", s"$wh/ckpt")
           .foreachBatch { (batch: DataFrame, _: Long) =>
             val s0 = batch.sparkSession
             // dedupe the batch to its own latest-per-key first (MERGE

@@ -23,13 +23,8 @@ class SortedFanOutPlanSpec extends AnyFunSuite {
 
   private val Sf0001 = "/root/testdata/sf0.001"
 
-  private lazy val spark = org.apache.spark.sql.SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .appName("sorted-fanout-plan-spec").getOrCreate()
+  private lazy val spark =
+    graft.util.Session.builder(4).appName("sorted-fanout-plan-spec").getOrCreate()
 
   /** Assert the sortedFanOut shape on a query's physical plan:
     * one range exchange, one Sort, and `heavyMarker` (an expression

@@ -8,15 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * JVM-wide session, so N suites pay one Spark startup). */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-test")
-    .getOrCreate()
+  lazy val spark: SparkSession =
+    graft.util.Session.builder(4).appName("graft-test").getOrCreate()
 
   val Sf0001 = "/root/testdata/sf0.001"
 

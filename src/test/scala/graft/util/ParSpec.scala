@@ -1,5 +1,6 @@
 package graft.util
 
+import org.apache.spark.graftbridge.TestBus
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,12 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * pinning an explicit partition count AQE cannot coalesce. */
 class ParSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("par-spec").getOrCreate()
+  private lazy val spark: SparkSession =
+    Session.builder(4).appName("par-spec").getOrCreate()
 
   test("fanOut widens a narrow input to default parallelism") {
     import spark.implicits._
@@ -62,16 +59,16 @@ class ParSpec extends AnyFunSuite {
     spark.sparkContext.addSparkListener(l)
     try {
       Par.fanOut(scanStage) // probe only — nothing executed
-      // listener events are posted asynchronously; give the bus a
-      // moment (a posted JobStart lands in well under this), then a
-      // control action below proves the listener itself works
-      Thread.sleep(500)
+      // listener events are posted asynchronously: drain the bus so a
+      // late JobStart cannot slip past, then a control action below
+      // proves the listener itself works
+      TestBus.waitUntilEmpty(spark.sparkContext)
       assert(jobs.get() === 0,
         s"fanOut's partition probe ran ${jobs.get()} job(s) on a " +
           "scan-stage input — the free-probe contract is broken")
       // control: the listener DOES see jobs (no vacuous pass)
       scanStage.write.format("noop").mode("overwrite").save()
-      Thread.sleep(500)
+      TestBus.waitUntilEmpty(spark.sparkContext)
       assert(jobs.get() > 0, "listener control failed to observe a job")
     } finally spark.sparkContext.removeSparkListener(l)
   }
